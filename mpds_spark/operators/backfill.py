@@ -15,15 +15,15 @@ Parity:
   entity becomes defVal everywhere. Needs the *next* non-null value, so it
   is forward-looking: gated by leakage_ok (train-prep only, never features).
 
-Scale: locf is pure window expressions (one entity exchange, WindowExec,
-whole-stage codegen). interpolate is a grouped-map Arrow UDF with a fully
-vectorized pandas body (no per-row Python).
+Scale: both are pure window expressions (one entity exchange, WindowExec,
+whole-stage codegen, no Python workers). _interp_reference is the numpy
+transcription of the reference the interpolate window plan is tested
+against.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -88,16 +88,12 @@ def interpolate(
     default: float = 0.0,
     out_col: str | None = None,
     leakage_ok: bool = False,
-    strategy: str = "window",
 ) -> DataFrame:
     """Per-entity linear interpolation of nulls (reference semantics above).
 
     Forward-looking (uses the next non-null sample): requires leakage_ok.
-
-    strategy="window" (default): pure window expressions — JVM-only, one
-    entity exchange, no pandas group materialization (scale path).
-    strategy="pandas": grouped-map Arrow numpy kernel (the original
-    transcription; differential-tested equal to the window plan).
+    Pure window expressions — JVM-only, one entity exchange, no pandas
+    group materialization.
     """
     if not leakage_ok:
         raise LeakageError(
@@ -105,35 +101,7 @@ def interpolate(
             "leakage_ok=True — train-prep only, never feature columns."
         )
     oc = out_col or f"{value}_interp"
-    if strategy == "window":
-        return _interpolate_window(df, value, entity, ts, default, oc)
-    if strategy != "pandas":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    schema = df.withColumn(oc, F.col(value).cast("double")).schema
-    cols = [f.name for f in schema.fields]
-
-    # timestamps → float seconds for the kernel
-    work = df
-    if str(df.schema[ts].dataType).lower().startswith("timestamp"):
-        work = df.withColumn("__ts_d", epoch_seconds(df, ts))
-        ts_num = "__ts_d"
-    else:
-        ts_num = ts
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_num, kind="mergesort").reset_index(drop=True)
-        x = pdf[ts_num].to_numpy(dtype="float64")
-        y = pdf[value].to_numpy(dtype="float64", na_value=np.nan)
-        pdf[oc] = _interp_reference(x, y, default)
-        return pdf[cols]
-
-    from mpds_spark.operators.util import pin_group_parallelism
-
-    return (
-        pin_group_parallelism(work, entity)
-        .groupBy(entity)
-        .applyInPandas(fn, schema)
-    )
+    return _interpolate_window(df, value, entity, ts, default, oc)
 
 
 def _interpolate_window(

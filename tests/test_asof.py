@@ -41,7 +41,8 @@ def _pandas_asof(left, right, direction, tolerance=None, allow_exact=True):
     return out.sort_values(["entity_id", "ts"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["window", "cogroup"])
+# "plan" only names the cases: the window plan is asof_join's one plan
+@pytest.mark.parametrize("plan", ["window"])
 @pytest.mark.parametrize(
     "direction,tolerance,allow_exact",
     [
@@ -56,7 +57,7 @@ def _pandas_asof(left, right, direction, tolerance=None, allow_exact=True):
     ],
 )
 def test_asof_join_matches_pandas(
-    spark, direction, tolerance, allow_exact, strategy
+    spark, direction, tolerance, allow_exact, plan
 ):
     left, right = _random_two_tables()
     got = (
@@ -67,7 +68,6 @@ def test_asof_join_matches_pandas(
             tolerance=tolerance,
             allow_exact_matches=allow_exact,
             leakage_ok=True,
-            strategy=strategy,
         )
         .orderBy("entity_id", "ts")
         .toPandas()
@@ -147,8 +147,7 @@ def test_asof_join_forward_requires_leakage_opt_in(spark):
 
 
 def test_asof_join_composite_by_key(spark):
-    """by=[...] composite keys: matches must respect BOTH key columns, on
-    both physical strategies."""
+    """by=[...] composite keys: matches must respect BOTH key columns."""
     import pandas as pd
 
     lpdf = pd.DataFrame(
@@ -168,15 +167,11 @@ def test_asof_join_composite_by_key(spark):
     )
     left = spark.createDataFrame(lpdf)
     right = spark.createDataFrame(rpdf)
-    for strategy in ("window", "cogroup"):
-        out = (
-            asof_join(
-                left, right, on="ts", by=["entity_id", "region"],
-                strategy=strategy,
-            )
-            .orderBy("entity_id", "region")
-            .toPandas()
-        )
-        # (a,x)->1, (a,y)->2, (b,x)-> no match (b's only ref is region y)
-        assert out["rv"].tolist()[:2] == [1.0, 2.0]
-        assert pd.isna(out["rv"].iloc[2])
+    out = (
+        asof_join(left, right, on="ts", by=["entity_id", "region"])
+        .orderBy("entity_id", "region")
+        .toPandas()
+    )
+    # (a,x)->1, (a,y)->2, (b,x)-> no match (b's only ref is region y)
+    assert out["rv"].tolist()[:2] == [1.0, 2.0]
+    assert pd.isna(out["rv"].iloc[2])
